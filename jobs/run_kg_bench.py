@@ -23,7 +23,7 @@ def main() -> None:
     ap.add_argument("--files", type=int, required=True,
                     help="fixture n_files the corpus was generated with "
                          "(anchors must match, FIXTURES.md)")
-    ap.add_argument("--stage", default="full", choices=["full", "extract", "detail"])
+    ap.add_argument("--stage", default="full", choices=["full", "extract"])
     ap.add_argument("--shuffle-partitions", type=int, default=32)
     args = ap.parse_args()
 
@@ -60,12 +60,6 @@ def main() -> None:
             "spark.executorEnv.NERZO_CACHE_ENTRIES",
             _os.environ["NERZO_CACHE_ENTRIES"],
         )
-    # experiment hook: NERZO_EXTRA_CONF="k=v;k=v" adds configs for one-off
-    # A/B samples (e.g. inMemoryColumnarStorage knobs) without touching the
-    # protocol defaults; unset → identical behavior
-    for kv in filter(None, _os.environ.get("NERZO_EXTRA_CONF", "").split(";")):
-        k, _, v = kv.partition("=")
-        builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -74,12 +68,7 @@ def main() -> None:
     from nerzo_spark.operators.extract_link import extract_and_link
     from nerzo_spark.session import warm_python_workers
 
-    # NERZO_SKIP_WARM=1: A/B hook — skip pre-spawning the python worker
-    # pool to test whether pool-size-driven cache fragmentation (tasks
-    # rotating over ~18 pooled workers per executor, each with cold lru
-    # caches) explains the super-linear 3.2M extraction
-    if not _os.environ.get("NERZO_SKIP_WARM"):
-        warm_python_workers(spark)
+    warm_python_workers(spark)
     sc = spark.sparkContext
     n_exec = max(1, len([e for e in sc._jsc.sc().statusTracker().getExecutorInfos()]) - 1)
     corpus = spark.read.parquet(args.corpus)
@@ -92,58 +81,6 @@ def main() -> None:
         n = extract_and_link(corpus, catalog).count()
         unit = "mentions"
         stages["extract"] = round(time.time() - t0, 2)
-    elif args.stage == "detail":
-        # diagnostic decomposition of the post-extract phase (NOT the
-        # official protocol — the per-arm counts re-execute arms that the
-        # production plan shares, so the sum exceeds --stage full's wall):
-        # where does the multi-executor tax live — overrides (iterative
-        # small stages), surfaces distinct (cross-executor shuffle), or the
-        # mention-scale triples arms?
-        from pyspark.storagelevel import StorageLevel
-        from pyspark.sql import functions as Fn
-        from nerzo_spark.operators.canonicalize import canonical_overrides
-        from nerzo_spark.pipeline.kg import _partition_local_dedup, build_triples
-
-        catalog = build_label_catalog(anchors)
-        # A/B the cache-materialization overhead in ONE JVM and window:
-        # plain count (no cache) vs persist+count (columnar cache build)
-        t = time.time()
-        extract_and_link(corpus, catalog).count()
-        stages["extract_nopersist"] = round(time.time() - t, 2)
-        t = time.time()
-        typed = extract_and_link(corpus, catalog).persist(StorageLevel.MEMORY_AND_DISK)
-        typed.count()
-        stages["extract_persist"] = round(time.time() - t, 2)
-        stages["extract_link_persist"] = round(time.time() - t0, 2)
-        t = time.time()
-        surfaces = (
-            typed.select("fine_type", "surface").distinct().persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        surfaces.count()
-        stages["surfaces_distinct"] = round(time.time() - t, 2)
-        t = time.time()
-        overrides = canonical_overrides(surfaces, already_distinct=True)
-        overrides.count()
-        stages["canonical_overrides"] = round(time.time() - t, 2)
-        t = time.time()
-        triples = build_triples(typed, overrides, catalog, surfaces=surfaces, file_local_dedup=True)
-        stages["triples_plan"] = round(time.time() - t, 2)
-        t = time.time()
-        n_links = typed.count()
-        stages["links_scan"] = round(time.time() - t, 2)
-        t = time.time()
-        # approximation of the defined_in arm (surface stands in for the
-        # override-joined entity id): isolates the partition-local dedup scan
-        n_def = (
-            typed.select(Fn.col("surface").alias("subj"), "repo", "path", "commit")
-            .mapInPandas(_partition_local_dedup, schema="subj string, repo string, path string, commit string")
-            .count()
-        )
-        stages["defined_in_dedup_scan"] = round(time.time() - t, 2)
-        t = time.time()
-        n = triples.count()
-        stages["full_triples_count"] = round(time.time() - t, 2)
-        unit = "triples"
     else:
         res = run_kg_pipeline(spark, corpus, anchors)
         stages["extract_link_persist"] = round(time.time() - t0, 2)

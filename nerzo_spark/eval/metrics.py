@@ -1,13 +1,12 @@
 """Evaluation operators as reusable DataFrame jobs (SURVEY.md §2.9 E1-E7).
 
-The catalog (plans/catalog_vec.py) registers oracle-checked query variants of
-these; this module is the library surface a pipeline calls, writing one
-``metrics(metric, key, value, run_id)`` table.
+The catalog (plans/catalog_vec.py) binds E1/E2/E4 to its tables and checks
+them against DuckDB oracles; this module is the one implementation of each.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from nerzo_spark.operators.topk import knn_self_join
@@ -42,12 +41,13 @@ def r_precision(vectors: DataFrame) -> DataFrame:
     )
 
 
-def optimal_threshold(scored: DataFrame, score_col: str, label_col: str) -> DataFrame:
+def optimal_threshold(scored: DataFrame, score_col: str, label: Column) -> DataFrame:
     """E4/E5 — exact optimal-threshold search via window cumsums
-    (contrastive/helper.py:2-37).  Pred positive iff score >= t."""
+    (contrastive/helper.py:2-37).  Pred positive iff score >= t; ``label``
+    is a boolean expression over ``scored`` (NULL counts as negative)."""
     pts = scored.groupBy(F.col(score_col).alias("s")).agg(
-        F.sum(F.col(label_col).cast("int")).alias("np"),
-        F.sum((~F.col(label_col)).cast("int")).alias("nn"),
+        F.sum(F.when(label, 1).otherwise(0)).alias("np"),
+        F.sum(F.when(label, 0).otherwise(1)).alias("nn"),
     )
     w = Window.orderBy(F.desc("s")).rowsBetween(Window.unboundedPreceding, 0)
     w_all = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -58,7 +58,7 @@ def optimal_threshold(scored: DataFrame, score_col: str, label_col: str) -> Data
         F.sum("np").over(w_all).alias("tp_all"),
         F.sum("nn").over(w_all).alias("tn_all"),
     )
-    acc = (F.col("cum_p") + F.col("tn_all") - F.col("cum_n")) / (
+    acc = (F.col("cum_p") + (F.col("tn_all") - F.col("cum_n"))) * 1.0 / (
         F.col("tp_all") + F.col("tn_all")
     )
     return (

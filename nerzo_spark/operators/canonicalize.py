@@ -104,19 +104,22 @@ def _driver_union_find(
     return [(ft, s, cluster_min[find((ft, s))]) for ft, s in pairs]
 
 
-def _with_entity_ids(resolved: DataFrame) -> DataFrame:
-    return resolved.select(
-        "fine_type",
-        "surface",
-        "canonical",
-        ent_id(F.col("fine_type"), F.col("canonical")).alias("entity_id"),
+def resolve_entities(df: DataFrame, overrides: DataFrame) -> DataFrame:
+    """Any frame with (fine_type, surface) columns + the override table of
+    :func:`canonical_overrides` -> the same frame with ``canonical`` and
+    ``entity_id`` appended (columns: fine_type, surface, <rest>, canonical,
+    entity_id).  The ONE place an entity id is derived: canonical = the
+    override (hot cluster) else the surface's own normalized key, and the
+    override table is broadcast-sized, so even a mention-scale input never
+    shuffles here."""
+    return (
+        df.join(F.broadcast(overrides), ["fine_type", "surface"], "left")
+        .withColumn(
+            "canonical",
+            F.coalesce(F.col("canonical"), normalize_surface(F.col("surface"))),
+        )
+        .withColumn("entity_id", ent_id(F.col("fine_type"), F.col("canonical")))
     )
-
-
-def canonical_expr(fine_type, surface, override_canonical):
-    """Column expression: canonical = override (hot cluster) else the
-    surface's own normalized key — the default-rule half of the mapping."""
-    return F.coalesce(override_canonical, normalize_surface(surface))
 
 
 def canonicalize_surfaces(
@@ -128,20 +131,14 @@ def canonicalize_surfaces(
 ) -> DataFrame:
     """typed_surfaces(fine_type, surface) -> (fine_type, surface, canonical,
     entity_id).  Deterministic: canonical = lexicographic min k1 in cluster."""
-    distinct_surfaces = typed_surfaces.select("fine_type", "surface").distinct()
     overrides = canonical_overrides(
         typed_surfaces, max_iter=max_iter, loop_partitions=loop_partitions,
         driver_limit=driver_limit,
         bucket_broadcast_bytes=bucket_broadcast_bytes,
     )
-    resolved = distinct_surfaces.join(
-        F.broadcast(overrides), ["fine_type", "surface"], "left"
-    ).select(
-        "fine_type",
-        "surface",
-        canonical_expr(F.col("fine_type"), F.col("surface"), F.col("canonical")).alias("canonical"),
+    return resolve_entities(
+        typed_surfaces.select("fine_type", "surface").distinct(), overrides
     )
-    return _with_entity_ids(resolved)
 
 
 def _collision_semi_join(

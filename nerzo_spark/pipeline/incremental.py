@@ -26,7 +26,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nerzo_spark.operators.canonicalize import canonical_overrides
+from nerzo_spark.operators.canonicalize import canonical_overrides, resolve_entities
 from nerzo_spark.operators.extract_link import extract_and_link
 from nerzo_spark.pipeline.kg import build_label_catalog, build_triples
 from nerzo_spark.pipeline.manifest import ManifestStore
@@ -75,21 +75,13 @@ def run_incremental(
     extract_wall_ms = (time.time() - t_extract0) * 1000.0
 
     all_typed = spark.read.parquet(mentions_path)
-    from nerzo_spark.functions.hashing import ent_id
-    from nerzo_spark.operators.canonicalize import canonical_expr
 
     t_canon0 = time.time()
     surfaces = all_typed.select("fine_type", "surface")
-    overrides = canonical_overrides(surfaces).localCheckpoint()
-    entities = (
-        surfaces.distinct()
-        .join(F.broadcast(overrides), ["fine_type", "surface"], "left")
-        .select(
-            "fine_type", "surface",
-            canonical_expr(F.col("fine_type"), F.col("surface"), F.col("canonical")).alias("canonical"),
-        )
-        .withColumn("entity_id", ent_id(F.col("fine_type"), F.col("canonical")))
-    )
+    # no checkpoint here: Path 1 returns a driver-local Arrow frame and
+    # Path 3 checkpoints its own result (canonical_overrides)
+    overrides = canonical_overrides(surfaces)
+    entities = resolve_entities(surfaces.distinct(), overrides)
     entities.write.mode("overwrite").parquet(entities_path)
     n_entities = spark.read.parquet(entities_path).count()
     canon_wall_ms = (time.time() - t_canon0) * 1000.0

@@ -36,10 +36,8 @@ from pyspark.sql import functions as F
 
 from nerzo_spark.embed.embedder import embed_span
 from nerzo_spark.fixtures.labels import label_rows
-from nerzo_spark.operators.canonicalize import canonicalize_surfaces
+from nerzo_spark.operators.canonicalize import canonical_overrides, resolve_entities
 from nerzo_spark.operators.extract_link import extract_and_link
-
-TRIPLE_SCHEMA = "subj string, pred string, obj string, repo string, path string, commit string"
 
 
 @dataclass
@@ -297,7 +295,8 @@ def build_triples(
     """(typed mentions, canonical overrides) -> (subj, pred, obj, provenance).
 
     Shuffle economics: the entity id of a mention is a COLUMN EXPRESSION —
-    ``ent_id(fine_type, coalesce(override, norm_key(surface)))`` — joined
+    ``ent_id(fine_type, coalesce(override, norm_key(surface)))``, see
+    :func:`~nerzo_spark.operators.canonicalize.resolve_entities` — joined
     only against the broadcast-sized override table (surfaces whose cluster
     canonical differs from their own key; the hot minority).  The
     distinct-surface-sized entity table never shuffles against mentions.
@@ -378,9 +377,6 @@ def _triple_parts(
     defined_base).  ``defined_base`` comes back already deduped; with
     ``count_only_dedup`` the partition-local variant collapses each batch to
     a count row (schema ``n long``) instead of returning the rows."""
-    from nerzo_spark.functions.hashing import ent_id
-    from nerzo_spark.operators.canonicalize import canonical_expr
-
     import pandas as pd
 
     spark = typed.sparkSession
@@ -397,25 +393,10 @@ def _triple_parts(
         )
     )
 
-    typed_e = typed.join(
-        F.broadcast(overrides), ["fine_type", "surface"], "left"
-    ).withColumn(
-        "entity_id",
-        ent_id(
-            F.col("fine_type"),
-            canonical_expr(F.col("fine_type"), F.col("surface"), F.col("canonical")),
-        ),
-    )
+    typed_e = resolve_entities(typed, overrides)
     ent_source = surfaces if surfaces is not None else typed.select("fine_type", "surface")
     ent_typed = (
-        ent_source.join(F.broadcast(overrides), ["fine_type", "surface"], "left")
-        .select(
-            "fine_type",
-            ent_id(
-                F.col("fine_type"),
-                canonical_expr(F.col("fine_type"), F.col("surface"), F.col("canonical")),
-            ).alias("entity_id"),
-        )
+        resolve_entities(ent_source, overrides)
         .select("entity_id", "fine_type")
         .distinct()
         .join(label_map, "fine_type")
@@ -526,8 +507,9 @@ def run_kg_pipeline(
     # ONE fused Python pass: detect -> embed -> link (vectors never cross
     # Arrow; see operators/extract_link.py).  The result is the mentions
     # table AND the links table in one — no mention-scale join at all.
-    # persist (columnar, compressed) over localCheckpoint (deserialized Java
-    # rows): ~10x smaller storage, measured ~1.3x faster end-to-end.
+    # persist (in-memory columnar cache) over localCheckpoint (deserialized
+    # Java rows): measured ~1.3x faster end-to-end.  The cache is
+    # uncompressed unless NERZO_CACHE_COMPRESSED=true (session.py).
     from pyspark.storagelevel import StorageLevel
 
     typed = extract_and_link(corpus, catalog, repartition_to=repartition_to).persist(
@@ -560,12 +542,6 @@ def run_kg_pipeline(
     # lineage stage label and its wall agree (VERDICT r3 nit).
     extract_wall_ms = (time.time() - t0) * 1000.0
 
-    from nerzo_spark.operators.canonicalize import (
-        canonical_expr,
-        canonical_overrides,
-    )
-    from nerzo_spark.functions.hashing import ent_id as _ent_id
-
     surfaces = surface_counts.select("fine_type", "surface")
     # broadcast-sized; Path 1 returns a driver-local Arrow frame and Path 3
     # self-checkpoints, so no eager materialization is needed here.
@@ -577,16 +553,7 @@ def run_kg_pipeline(
     t_canon0 = time.time()
     overrides = canonical_overrides(surfaces, already_distinct=True)
     canon_wall_ms = (time.time() - t_canon0) * 1000.0
-    entities = (
-        surfaces
-        .join(F.broadcast(overrides), ["fine_type", "surface"], "left")
-        .select(
-            "fine_type",
-            "surface",
-            canonical_expr(F.col("fine_type"), F.col("surface"), F.col("canonical")).alias("canonical"),
-        )
-        .withColumn("entity_id", _ent_id(F.col("fine_type"), F.col("canonical")))
-    )
+    entities = resolve_entities(surfaces, overrides)
     # typed reaches build_triples through a narrow chain from extraction,
     # so the file-local defined_in dedup is exact (see build_triples doc)
     triples = build_triples(
@@ -654,12 +621,3 @@ def run_kg_pipeline(
         n_mentions=n_mentions,
         triples_count=triples_count,
     )
-
-
-def triples_from_corpus(
-    spark: SparkSession,
-    corpus: DataFrame,
-    anchors: DataFrame,
-    repartition_to: int | None = None,
-) -> DataFrame:
-    return run_kg_pipeline(spark, corpus, anchors, repartition_to=repartition_to).triples

@@ -16,6 +16,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from nerzo_spark.functions.hashing import md5_i64_duckdb, md5_i64_sql
+from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform, minhash_signatures
 from nerzo_spark.plans.catalog import T, T_par, register
 
 _TOK = r"\s+"
@@ -275,10 +276,6 @@ _SHINGLE_DUCK = (
 )
 
 
-def _mh_spark(j: int) -> str:
-    return f"array_min(transform({_SHINGLE_SPARK}, s -> md5(concat('{j}|', s))))"
-
-
 def _mh_duck(j: int) -> str:
     return f"list_aggregate(list_transform({_SHINGLE_DUCK}, s -> md5('{j}|' || s)), 'min')"
 
@@ -326,14 +323,6 @@ def _shingles_exploded(spark, sf_dir):
     return _explode_shingles(_docs_par(spark, sf_dir))
 
 
-def _signatures(sh):
-    """One-pass hash-aggregate: 4 minhashes per doc from the exploded
-    shingle table (map-side partial min -> single shuffle on doc_id)."""
-    return sh.groupBy("doc_id").agg(
-        *[F.min(F.md5(F.concat(F.lit(f"{j}|"), F.col("s")))).alias(f"mh{j}") for j in range(4)]
-    )
-
-
 @register(
     "dedup_minhash_signatures",
     f"""SELECT doc_id, {_mh_duck(0)} AS mh0, {_mh_duck(1)} AS mh1,
@@ -343,7 +332,7 @@ def _signatures(sh):
 def dedup_minhash_signatures(spark, sf_dir):
     """MinHash signatures (k=4) over word-3-gram shingles; md5-based so the
     signature is engine-portable."""
-    return _signatures(_shingles_exploded(spark, sf_dir))
+    return minhash_signatures(_shingles_exploded(spark, sf_dir))
 
 
 @register(
@@ -389,8 +378,6 @@ def dedup_minhash_lsh_pairs(spark, sf_dir):
     signatures/sizes as per-row array expressions, shingles exploded only
     for candidate docs; identical output (oracle-verified), no corpus-scale
     explode/persist/shuffle."""
-    from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
-
     d = _docs_par(spark, sf_dir)
 
     def _cand_exploder(ids_df):

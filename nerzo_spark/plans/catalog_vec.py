@@ -11,27 +11,25 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from nerzo_spark.eval.metrics import optimal_threshold, r_precision, recall_at_k
 from nerzo_spark.plans.catalog import T, T_par, register
 
-# explicit double-precision cosine, both dialects (sequential fold)
-_COS_SPARK = (
-    "aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>), CAST({b} AS ARRAY<DOUBLE>),"
-    " (x, y) -> x * y), 0D, (s, x) -> s + x)"
-    " / (sqrt(aggregate(CAST({a} AS ARRAY<DOUBLE>), 0D, (s, x) -> s + x * x))"
-    " * sqrt(aggregate(CAST({b} AS ARRAY<DOUBLE>), 0D, (s, x) -> s + x * x)))"
-)
-
-# Factored pieces of the SAME cosine (guide §1.2 per-task work): higher-order
-# array expressions are interpreted (no codegen), so per-PAIR scoring paths
-# precompute each side's norm ONCE per row and divide the dot product by the
-# norm product — the identical scalar op sequence as _COS_SPARK (dot fold,
-# sqrt(sum-of-squares fold) per side, one multiply, one divide), so results
-# are bit-identical while the per-pair work drops from 3 array folds to 1.
+# The one Spark cosine: explicit double precision, sequential folds, built
+# from its two pieces.  Per-PAIR scoring paths use the pieces directly
+# (guide §1.2 per-task work): higher-order array expressions are
+# interpreted (no codegen), so they precompute each side's norm ONCE per
+# row and divide the dot product by the norm product — the identical scalar
+# op sequence as _COS_SPARK (dot fold, sqrt(sum-of-squares fold) per side,
+# one multiply, one divide), so results are bit-identical while the
+# per-pair work drops from 3 array folds to 1.
 _DOT_SPARK = (
     "aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>), CAST({b} AS ARRAY<DOUBLE>),"
     " (x, y) -> x * y), 0D, (s, x) -> s + x)"
 )
 _NORM_SPARK = "sqrt(aggregate(CAST({v} AS ARRAY<DOUBLE>), 0D, (s, x) -> s + x * x))"
+_COS_SPARK = (
+    f"{_DOT_SPARK} / ({_NORM_SPARK.format(v='{a}')} * {_NORM_SPARK.format(v='{b}')})"
+)
 
 _COS_DUCK = (
     "list_aggregate(list_transform(generate_series(1, len({a})),"
@@ -106,18 +104,8 @@ def j1_cosine_topk(spark, sf_dir):
         FROM per_q GROUP BY qlab""",
 )
 def e1_recall_at_k(spark, sf_dir):
-    """E1 — recall@k per type (fewnerd_retrieve_eval.py:40-63): exact kNN
-    self-join (J2, GEMM path) -> top-10 label-hit fraction -> macro per label."""
-    from nerzo_spark.operators.topk import knn_self_join
-
-    e = T(spark, sf_dir, "embeddings")
-    knn = knn_self_join(e, k=10)
-    per_q = knn.groupBy("query_id", "query_label").agg(
-        F.avg((F.col("neighbor_label") == F.col("query_label")).cast("double")).alias("hit")
-    )
-    return per_q.groupBy(F.col("query_label").alias("label")).agg(
-        F.round(F.avg("hit"), 6).alias("recall_at_10")
-    )
+    """E1 — recall@10 per type (fewnerd_retrieve_eval.py:40-63)."""
+    return recall_at_k(T(spark, sf_dir, "embeddings"), k=10)
 
 
 @register(
@@ -137,24 +125,8 @@ def e1_recall_at_k(spark, sf_dir):
         FROM per_q GROUP BY qlab""",
 )
 def e2_rprecision(spark, sf_dir):
-    """E2 — R-precision (fewnerd_single_vector_r_precision.py:26-51): per
-    query, fraction of top (class_size - 1) neighbors sharing the label;
-    macro-averaged per label."""
-    from nerzo_spark.operators.topk import knn_self_join
-
-    e = T(spark, sf_dir, "embeddings")
-    sizes = e.groupBy("label").agg(F.count("*").alias("n"))
-    kmax = max(r["n"] for r in sizes.collect()) - 1
-    knn = knn_self_join(e, k=kmax)
-    per_q = (
-        knn.join(F.broadcast(sizes), knn.query_label == sizes.label)
-        .filter(F.col("rank") <= F.col("n") - 1)
-        .groupBy("query_id", "query_label")
-        .agg(F.avg((F.col("neighbor_label") == F.col("query_label")).cast("double")).alias("frac"))
-    )
-    return per_q.groupBy(F.col("query_label").alias("label")).agg(
-        F.round(F.avg("frac"), 6).alias("r_precision")
-    )
+    """E2 — R-precision (fewnerd_single_vector_r_precision.py:26-51)."""
+    return r_precision(T(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -177,31 +149,10 @@ def e2_rprecision(spark, sf_dir):
        LIMIT 1""",
 )
 def e4_optimal_threshold(spark, sf_dir):
-    """E4/E5 — optimal-threshold search (contrastive/helper.py:2-37): scan
-    sorted scores, accuracy-if-threshold-were-here via window cumsums; exact,
-    O(n log n).  Pred positive iff score >= t; label = purchase."""
-    ev = T(spark, sf_dir, "events")
-    pts = ev.groupBy(F.col("value").alias("s")).agg(
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("np"),
-        F.sum(F.when(F.col("event_type") == "purchase", 0).otherwise(1)).alias("nn"),
-    )
-    w = Window.orderBy(F.desc("s")).rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    cums = pts.select(
-        "s",
-        F.sum("np").over(w).alias("cum_p"),
-        F.sum("nn").over(w).alias("cum_n"),
-        F.sum("np").over(w_all).alias("tp_all"),
-        F.sum("nn").over(w_all).alias("tn_all"),
-    )
-    acc = (F.col("cum_p") + (F.col("tn_all") - F.col("cum_n"))) * 1.0 / (
-        F.col("tp_all") + F.col("tn_all")
-    )
-    return (
-        cums.withColumn("acc", acc)
-        .orderBy(F.desc("acc"), F.asc("s"))
-        .limit(1)
-        .select(F.col("s").alias("best_threshold"), F.round("acc", 6).alias("best_acc"))
+    """E4/E5 — optimal-threshold search (contrastive/helper.py:2-37) over
+    event values; label = purchase."""
+    return optimal_threshold(
+        T(spark, sf_dir, "events"), "value", F.col("event_type") == "purchase"
     )
 
 

@@ -92,9 +92,6 @@ def get_spark(
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    builder = (
-        builder
-    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 from nerzo_spark.plans import catalog
 import nerzo_spark.plans.catalog_text  # noqa: F401
@@ -80,16 +81,21 @@ def test_ivf_assignment_no_exchange_before_probe_join(spark):
 
 def test_f2_token_offsets_shuffle_free(spark):
     """The prefix-sum offsets are one array fold: Scan -> [input-skew
-    repartition] -> Project -> Explode — no KEYED shuffle.  The r7 T_par
-    round-robin exchange (single-row-group scan repair, guide §2.5) is
-    allowed; a hashpartitioning exchange would mean the fold itself started
-    shuffling and must fail.  Matched via the bare "hashpartitioning"
-    Arguments token — formatted explain never prints the contiguous string
-    "Exchange hashpartitioning", so matching that would be vacuous."""
-    import nerzo_spark.plans.catalog_text as ct
-
+    repartition] -> Project -> Explode — no KEYED shuffle.  The only
+    exchange is the r7 T_par round-robin repair (single-row-group scan,
+    guide §2.5); a hashpartitioning exchange would mean the fold itself
+    started shuffling and must fail.  Formatted explain prints each node as
+    a "(N) Exchange" block whose Arguments line names the partitioning —
+    the contiguous string "Exchange hashpartitioning" never occurs, so
+    matching that would be vacuous."""
     df = catalog.queries()["f2_token_offsets"](spark, SF)
-    assert "hashpartitioning" not in plan_of(df)
+    plan = plan_of(df)
+    assert "hashpartitioning" not in plan
+    exchanges = [
+        b for b in plan.split("\n\n") if re.match(r"\(\d+\) Exchange\b", b.strip())
+    ]
+    assert len(exchanges) == 1, plan
+    assert "Arguments: RoundRobinPartitioning(" in exchanges[0], exchanges[0]
 
 
 def test_u5_projection_no_shuffle_beyond_join(spark):
